@@ -19,6 +19,15 @@ mandated by BASELINE.json, designed for 100 TB scale:
   consumed by ``__spark_entry__.py``.
 """
 
-from frinesis_spark.session import get_spark  # noqa: F401
-
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # PEP 562 lazy export: ``session`` pulls in pyspark and numpy, which
+    # the Kinesis sink and other Spark-free modules must not pay for
+    # just by importing a submodule of this package.
+    if name == "get_spark":
+        from frinesis_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

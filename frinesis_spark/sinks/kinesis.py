@@ -9,7 +9,11 @@ with size+time batching, retry, backoff, shedding and a drain deadline
 Spark mapping (SURVEY.md §1.3, §3.4):
 
 - the hand-rolled run loop / goroutines (A13) → Structured Streaming's
-  micro-batch loop + executor parallelism;
+  micro-batch loop + executor parallelism; the drain goroutine's
+  overlap of network waits with buffering → drain rounds, up to
+  ``PIPELINE_WIDTH`` PutRecords requests in flight at once (see
+  :class:`BatchProducer`; the client must be safe to call from several
+  threads, which boto3 low-level clients are);
 - time-triggered flush (A5) → ``trigger(processingTime=...)``;
 - everything PutRecords-specific (A4, A6–A11) lives in
   :class:`BatchProducer` below — plain Python running inside
@@ -27,11 +31,15 @@ guarantee — documented, not fought.
 
 from __future__ import annotations
 
+import dataclasses
 import logging
 import os
+import threading
 import time
 import uuid
+from collections import deque
 from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 # Task-local logger mirroring the reference's zap logger surface
@@ -54,6 +62,14 @@ MAX_KINESIS_BATCH_SIZE = 500
 # data-loss logging as the max-attempts drop path.
 MAX_RECORD_BYTES = 1_048_576
 MAX_REQUEST_BYTES = 5 * 1_048_576
+
+# PutRecords requests one flush round keeps in flight (the caller's
+# thread sends one, the shared pool the rest). A round also stops at
+# MAX_REQUEST_BYTES of total payload, which bounds the bytes in flight.
+PIPELINE_WIDTH = 4
+
+# Newest event messages a producer keeps (ProducerStats.events).
+EVENTS_MAXLEN = 1000
 
 
 class BufferFullError(RuntimeError):
@@ -199,7 +215,12 @@ def generate_partition_key() -> str:
 
 @dataclass
 class ProducerStats:
-    """StatsBatch port (batchproducer.go:58-66) + event log (A14/A15)."""
+    """StatsBatch port (batchproducer.go:58-66) + event log (A14/A15).
+
+    ``events`` keeps the newest ``EVENTS_MAXLEN`` messages, so a
+    long-lived producer under sustained failure holds bounded memory and
+    every stats snapshot copies a bounded log; ``events_total`` counts
+    every event ever recorded."""
 
     records_sent: int = 0
     records_dropped: int = 0
@@ -208,19 +229,61 @@ class ProducerStats:
     put_calls: int = 0
     retries: int = 0
     buffer_size: int = 0
-    events: list = field(default_factory=list)
+    events: deque = field(default_factory=lambda: deque(maxlen=EVENTS_MAXLEN))
+    events_total: int = 0
+
+
+def _put_pool() -> ThreadPoolExecutor:
+    """The process-wide pool that runs a drain round's requests beyond
+    the first, created on first use. Process-wide, not per producer:
+    producers have no close(), and a Spark task makes one per topic, so
+    per-producer pools would leave threads behind."""
+    global _pool
+    with _pool_lock:
+        if _pool is None:
+            _pool = ThreadPoolExecutor(
+                max_workers=PIPELINE_WIDTH - 1, thread_name_prefix="kinesis-put"
+            )
+        return _pool
+
+
+def _forget_pool_in_child() -> None:
+    # A forked child (a Spark Python worker, a multiprocessing producer)
+    # inherits the pool object but none of its threads: submitted work
+    # would queue forever. The child builds its own pool on first use.
+    global _pool, _pool_lock
+    _pool = None
+    _pool_lock = threading.Lock()
+
+
+_pool: ThreadPoolExecutor | None = None
+_pool_lock = threading.Lock()
+os.register_at_fork(after_in_child=_forget_pool_in_child)
 
 
 class BatchProducer:
-    """Synchronous port of the reference's buffered batch producer
+    """Port of the reference's buffered batch producer
     (batchproducer/batchproducer.go).
 
-    The Go original runs a background goroutine with a select loop
-    (A13); under Spark the micro-batch scheduler plays that role, so
-    this port drains synchronously: ``add`` buffers (A3), ``flush``
-    drains with an optional deadline (A10), ``_send_batch`` implements
-    batched egress with partial-failure split (A6), exponential backoff
-    (A7), per-record retry/drop (A8) and overload shedding (A9).
+    The Go original drains on a background goroutine while ``Add``
+    keeps buffering (A13). Under Spark the micro-batch scheduler
+    decides when to drain, so this port drains from the caller's
+    thread: ``add`` buffers (A3), ``flush`` drains with an optional
+    deadline (A10). The goroutine's overlap survives as *drain rounds*:
+    each round takes up to ``PIPELINE_WIDTH`` requests off the buffer
+    (≤500 records and ≤5 MiB each, and ≤5 MiB for the whole round) and
+    keeps them in flight together. The caller's thread sends the first
+    request and a small shared pool sends the rest; only
+    ``client.put_records`` runs off the caller's thread. Responses are
+    handled on the caller's thread in submission order, so the buffer,
+    stats, events and logs are only ever touched by one thread.
+    ``_handle_response`` implements the partial-failure split (A6),
+    exponential backoff accounting (A7), per-record retry/drop (A8) and
+    overload shedding (A9). ``add``'s blocking drain is a round of
+    width 1.
+
+    Client contract: ``client.put_records`` must be safe to call from
+    several threads at once. boto3 low-level clients are.
 
     ``clock``/``sleep`` are injectable for deterministic tests — the
     same trick as the reference's mocked client + latency knobs
@@ -282,8 +345,8 @@ class BatchProducer:
     def flush(
         self, timeout_s: float | None = None, send_stats: bool = False
     ) -> tuple[int, int]:
-        """Send max-size batches until empty or deadline; returns
-        (records_sent_now, records_remaining) — Flush's contract
+        """Send rounds of max-size batches until empty or deadline;
+        returns (records_sent_now, records_remaining) — Flush's contract
         (batchproducer.go:290-319). A timeout of 0 — like None — means
         NO deadline (the reference: 'A timeout value of 0 means no
         timeout', batchproducer.go:39); an un-deadlined flush retries
@@ -296,47 +359,111 @@ class BatchProducer:
         while self._buffer:
             if deadline is not None and self.clock() >= deadline:
                 break
-            self._send_batch(MAX_KINESIS_BATCH_SIZE, deadline=deadline)
+            self._send_batch(
+                MAX_KINESIS_BATCH_SIZE, deadline=deadline, width=PIPELINE_WIDTH
+            )
         if send_stats:
             self._emit_stats()
         return self.stats.records_sent - sent_before, len(self._buffer)
 
-    # -- A4/A6/A7/A8/A9: one batched PutRecords round-trip --------------
-    def _send_batch(self, batch_size: int, deadline: float | None = None) -> int:
-        """Send ≤batch_size records; returns how many left the buffer
-        for good (sent or dropped). ``deadline`` (clock units) bounds
-        the backoff sleep so a drain deadline stays a real deadline."""
+    # -- A4/A7: one drain round of PutRecords round-trips ---------------
+    def _send_batch(
+        self, batch_size: int, deadline: float | None = None, width: int = 1
+    ) -> int:
+        """One drain round: up to ``width`` requests of ≤batch_size
+        records in flight together. Returns how many records left the
+        buffer for good (sent or dropped). ``deadline`` (clock units)
+        bounds the backoff sleep, and no request starts once it has
+        passed, so a drain deadline stays a real deadline."""
         if not self._buffer:
             return 0
 
         # A7: exponential backoff while in an error run
         # (batchproducer.go:334-344): 50ms doubling per consecutive
         # error, capped at backoff_max_s, and clamped to the remaining
-        # flush deadline — a deep error run must not sleep past it.
+        # flush deadline — a deep error run must not sleep past it. The
+        # exponent stops at 1023, the largest a float power of two takes:
+        # past ~1025 consecutive errors 2 ** n no longer converts.
         if self.consecutive_errors > 0:
             delay = min(
                 self.config.backoff_initial_s
-                * (2 ** (self.consecutive_errors - 1)),
+                * 2.0 ** min(self.consecutive_errors - 1, 1023),
                 self.config.backoff_max_s,
             )
             if deadline is not None:
                 delay = min(delay, max(0.0, deadline - self.clock()))
-            self.stats.events.append(
+            self._event(
                 f"backoff {delay * 1000:.0f}ms after "
                 f"{self.consecutive_errors} consecutive errors"
             )
             if delay > 0:
                 self.sleep(delay)
+            if deadline is not None and self.clock() >= deadline:
+                return 0
 
-        # A15: tick on every drain iteration (success or error run), so
-        # slow AND failing drains both surface periodic snapshots.
+        # A15: tick at the start of every round and after every handled
+        # response (success or error run), so slow AND failing drains
+        # both surface periodic snapshots.
         self._tick_stats()
 
-        # Byte-aware take (r9 review wave 8): respect BOTH PutRecords
-        # limits while taking — ≤500 records AND ≤5 MiB per request;
-        # an over-1-MiB record is undeliverable and drops here with
-        # the data-loss log line (the ValidationException it would
-        # cause fails the WHOLE call and livelocks the retry loop).
+        batches, done = self._take_round(batch_size, width)
+        if not batches:
+            # Everything taken was oversize: nothing to send, but the
+            # drops left the buffer for good.
+            return done
+        requests = [
+            [{"Data": data, "PartitionKey": pk} for data, pk, _ in batch]
+            for batch in batches
+        ]
+        self.stats.put_calls += len(batches)
+        others = [_put_pool().submit(self._put, r) for r in requests[1:]]
+        in_flight = sum(len(batch) for batch in batches)
+        for i, batch in enumerate(batches):
+            resp, exc = self._put(requests[0]) if i == 0 else others[i - 1].result()
+            in_flight -= len(batch)
+            done += self._handle_response(batch, resp, exc, in_flight)
+            self._tick_stats()
+        return done
+
+    def _put(self, records: list[dict]) -> tuple[dict | None, Exception | None]:
+        """The only step of a round that may run off the caller's thread."""
+        try:
+            return self.client.put_records(
+                Records=records, StreamName=self.stream_name
+            ), None
+        except Exception as exc:  # whole-call failure, handled by the caller
+            return None, exc
+
+    def _take_round(
+        self, batch_size: int, width: int
+    ) -> tuple[list[list[tuple[bytes, str, int]]], int]:
+        """Take up to ``width`` requests off the front of the buffer;
+        returns them and the number of oversize records dropped. The
+        round stops before a request that would push the round's total
+        payload past MAX_REQUEST_BYTES; that request stays at the front
+        of the buffer for the next round."""
+        batches: list = []
+        dropped = 0
+        round_bytes = 0
+        while self._buffer and len(batches) < width:
+            batch, used_bytes, n_dropped = self._take(batch_size)
+            dropped += n_dropped
+            if not batch:
+                continue
+            if batches and round_bytes + used_bytes > MAX_REQUEST_BYTES:
+                self._buffer[:0] = batch
+                break
+            batches.append(batch)
+            round_bytes += used_bytes
+        return batches, dropped
+
+    def _take(self, batch_size: int) -> tuple[list, int, int]:
+        """Byte-aware take of one request (r9 review wave 8): respect
+        BOTH PutRecords limits while taking — ≤500 records AND ≤5 MiB
+        per request; an over-1-MiB record is undeliverable and drops
+        here with the data-loss log line (the ValidationException it
+        would cause fails the WHOLE call and livelocks the retry loop).
+        Returns (batch, its payload bytes, records dropped)."""
         take_n = min(batch_size, len(self._buffer), MAX_KINESIS_BATCH_SIZE)
         batch: list = []
         consumed = 0
@@ -346,7 +473,7 @@ class BatchProducer:
             if rec_bytes > MAX_RECORD_BYTES:
                 consumed += 1
                 self.stats.records_dropped += 1
-                self.stats.events.append(
+                self._event(
                     f"dropped oversize record ({rec_bytes} bytes > "
                     f"{MAX_RECORD_BYTES} PutRecords limit)"
                 )
@@ -363,38 +490,39 @@ class BatchProducer:
             batch.append((data, pk, attempts))
             used_bytes += rec_bytes
             consumed += 1
-        self._buffer = self._buffer[consumed:]
-        if not batch:
-            # Everything taken was oversize: nothing to send, but the
-            # drops left the buffer for good.
-            return consumed
-        entries = [
-            {"Data": data, "PartitionKey": pk} for data, pk, _ in batch
-        ]
-        self.stats.put_calls += 1
-        try:
-            resp = self.client.put_records(
-                Records=entries, StreamName=self.stream_name
-            )
-        except Exception as exc:  # whole-call failure (A7 path)
+        del self._buffer[:consumed]
+        return batch, used_bytes, consumed - len(batch)
+
+    # -- A6/A7/A8/A9: one PutRecords response ---------------------------
+    def _handle_response(
+        self,
+        batch: list[tuple[bytes, str, int]],
+        resp: dict | None,
+        exc: Exception | None,
+        in_flight: int,
+    ) -> int:
+        """Settle one request's records: sent, requeued or dropped.
+        ``in_flight`` counts the round's records whose responses are
+        not handled yet. Returns how many left the buffer for good."""
+        if exc is not None:  # whole-call failure (A7 path)
             self.stats.kinesis_errors += 1
             self.consecutive_errors += 1
-            self.stats.events.append(f"put_records error: {exc}")
+            self._event(f"put_records error: {exc}")
             # ≙ TestReturnEventWhenKinesisReturnsError (test:592-607):
             # the failure surfaces on the event/log channel, verbatim.
             _LOG.error("PutRecords request failed: %s", exc)
-            # A9: shed the in-flight batch under persistent failure with
+            # A9: shed the failed batch under persistent failure with
             # a (nearly) full buffer (batchproducer.go:354-357, :387-389).
-            # Fullness counts the in-flight batch — it came out of the
-            # buffer and would go right back on requeue.
+            # Fullness counts every record of the round not settled
+            # yet — they came out of the buffer and may go right back.
             if (
                 self.consecutive_errors
                 >= self.config.shed_after_consecutive_errors
-                and len(self._buffer) + len(batch)
+                and len(self._buffer) + len(batch) + in_flight
                 >= self.config.shed_buffer_ratio * self.config.buffer_size
             ):
                 self.stats.records_shed += len(batch)
-                self.stats.events.append(f"shed {len(batch)} records")
+                self._event(f"shed {len(batch)} records")
                 # Data loss MUST hit the log, not just stats.events
                 # (the reference's shed path logs at Error,
                 # batchproducer.go:354-357).
@@ -434,7 +562,7 @@ class BatchProducer:
         if len(records) != len(batch):
             self.stats.kinesis_errors += 1
             self.consecutive_errors += 1
-            self.stats.events.append(
+            self._event(
                 f"malformed put_records response: {len(records)} results "
                 f"for {len(batch)} records; requeued batch"
             )
@@ -460,7 +588,7 @@ class BatchProducer:
                 attempts += 1
                 if attempts >= self.config.max_attempts_per_record:
                     self.stats.records_dropped += 1
-                    self.stats.events.append(
+                    self._event(
                         f"dropped record after {attempts} attempts: "
                         f"{result.get('ErrorCode')}"
                     )
@@ -489,6 +617,10 @@ class BatchProducer:
         # reference (batchproducer.go:360, :425-426, :434-437).
         self._buffer.extend(records)
 
+    def _event(self, message: str) -> None:
+        self.stats.events.append(message)
+        self.stats.events_total += 1
+
     def _tick_stats(self) -> None:
         """A15 periodic ticker: emit a stats snapshot once per
         ``stat_interval_s`` while batches are moving, so a monitoring
@@ -508,10 +640,8 @@ class BatchProducer:
             # mutating instance. Deviation: counters stay CUMULATIVE
             # (the reference resets after each send) — deltas are
             # derivable from consecutive snapshots, the reverse is not.
-            import dataclasses
-
             snap = dataclasses.replace(self.stats)
-            snap.events = list(self.stats.events)
+            snap.events = self.stats.events.copy()
             self.stat_receiver(snap)
 
 

@@ -12,10 +12,15 @@ received (integration_test.go:151-157).
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from frinesis_spark.sinks.kinesis import (
+    EVENTS_MAXLEN,
     MAX_KINESIS_BATCH_SIZE,
+    MAX_REQUEST_BYTES,
+    PIPELINE_WIDTH,
     BatchProducer,
     BufferFullError,
     ConfigError,
@@ -84,13 +89,28 @@ def test_config_from_env():
 # -- happy path: size-chunked egress (A4/A6) ---------------------------
 
 def test_flush_chunks_at_500():
-    prod, client, _ = make_producer(buffer_size=2000)
+    together = threading.Barrier(3, timeout=5)
+    passed = []
+
+    class RoundClient(MockKinesisClient):
+        def put_records(self, Records, StreamName):  # noqa: N803
+            # passes only if all three requests are in flight together
+            try:
+                together.wait()
+                passed.append(True)
+            except threading.BrokenBarrierError:
+                passed.append(False)
+            return super().put_records(Records, StreamName)
+
+    prod, client, _ = make_producer(client=RoundClient(), buffer_size=2000)
     for i in range(1200):
         prod.add(f"m{i}".encode())
     sent, remaining = prod.flush()
     assert (sent, remaining) == (1200, 0)
-    # ≤500-record PutRecords chunks (batchproducer.go:15)
-    assert client.calls == [500, 500, 200]
+    # ≤500-record PutRecords chunks (batchproducer.go:15), sent as one
+    # drain round, so their completion order is not fixed
+    assert sorted(client.calls) == [200, 500, 500]
+    assert passed == [True, True, True]
     assert prod.stats.records_sent == 1200
 
 
@@ -176,12 +196,14 @@ def test_flush_timeout_leaves_remainder():
     clock = FakeClock()
     client = MockKinesisClient(sleep_for_s=1.0, advance_clock=clock.advance)
     prod, _, _ = make_producer(client=client, clock=clock, buffer_size=5000)
-    for i in range(1500):
+    for i in range(5000):
         prod.add(b"x")
-    # each 500-chunk put costs 1s of fake time; 2s budget → 2 chunks
-    sent, remaining = prod.flush(timeout_s=2.0)
-    assert sent == 1000
-    assert remaining == 500
+    # each 500-chunk put costs 1s of fake time (a round of 4 costs 4s);
+    # the deadline is checked before each round: rounds start at t=0
+    # and t=4 < 5, the third would start at t=8 → 8 chunks
+    sent, remaining = prod.flush(timeout_s=5.0)
+    assert sent == 4000
+    assert remaining == 1000
 
 
 def test_flush_no_timeout_drains_fully():
@@ -529,3 +551,206 @@ def test_payload_type_dispatch():
     assert _payload_bytes(bytearray(b"ba")) == b"ba"
     with _pytest.raises(TypeError, match="int"):
         _payload_bytes(7)
+
+
+# -- drain rounds: up to PIPELINE_WIDTH requests in flight together ----
+
+
+def test_round_bounds_requests_and_bytes_in_flight():
+    """No round has more than PIPELINE_WIDTH requests or more than
+    MAX_REQUEST_BYTES of payload in flight. Each call waits at a gate
+    until the round's other requests can join it (or 50 ms pass), so
+    the counting client sees every request a round keeps in flight."""
+    gate = threading.Condition()
+    state = {"n": 0, "bytes": 0, "max_n": 0, "max_bytes": 0}
+
+    class CountingClient(MockKinesisClient):
+        def put_records(self, Records, StreamName):  # noqa: N803
+            size = sum(len(r["Data"]) + len(r["PartitionKey"]) for r in Records)
+            with gate:
+                state["n"] += 1
+                state["bytes"] += size
+                state["max_n"] = max(state["max_n"], state["n"])
+                state["max_bytes"] = max(state["max_bytes"], state["bytes"])
+                gate.notify_all()
+                gate.wait_for(lambda: state["n"] >= PIPELINE_WIDTH, timeout=0.05)
+            try:
+                return super().put_records(Records, StreamName)
+            finally:
+                with gate:
+                    state["n"] -= 1
+                    state["bytes"] -= size
+
+    prod, client, _ = make_producer(client=CountingClient(), buffer_size=10_000)
+    for i in range(5000):  # ten 500-record requests: rounds of 4, 4, 2
+        prod.add(b"s" * 100, f"k{i}")
+    for i in range(20):  # 20 × 0.6 MB: one request (~4.8 MB) per round
+        prod.add(b"L" * 600_000, f"L{i}")
+    sent, remaining = prod.flush(timeout_s=60)
+    assert (sent, remaining) == (5020, 0)
+    assert state["max_n"] == PIPELINE_WIDTH
+    assert 4_000_000 < state["max_bytes"] <= MAX_REQUEST_BYTES
+    assert len(client.calls) == 10 + 3  # the round cap split no request
+
+
+def test_shed_counts_round_in_flight_records():
+    """A9 fullness counts every record of the round not settled yet:
+    when the first of four failed requests is handled, the other three
+    are still in flight, so the buffer counts as full and that request
+    is shed — exactly what four serial calls would have done."""
+    prod, client, _ = make_producer(buffer_size=20)
+    client.should_err = True
+    prod.consecutive_errors = 5  # already in a persistent error run
+    for i in range(20):  # buffer exactly full → ≥95%
+        prod._buffer.append((b"x", f"pk{i}", 0))
+    assert prod._send_batch(5, width=4) == 5
+    assert len(client.calls) == 4
+    assert prod.stats.records_shed == 5
+    # the other three failed requests were requeued, in order
+    assert [pk for _, pk, _ in prod._buffer] == [f"pk{i}" for i in range(5, 20)]
+
+
+def test_requeue_order_does_not_depend_on_completion_order():
+    """Responses are handled in submission order, so the requeued
+    records land at the back in the same order however the concurrent
+    calls happen to finish."""
+    import time
+
+    def run(delays):
+        class SlowClient(MockKinesisClient):
+            def put_records(self, Records, StreamName):  # noqa: N803
+                time.sleep(delays[int(Records[0]["Data"][1:]) // 500])
+                return super().put_records(Records, StreamName)
+
+        prod, _, _ = make_producer(client=SlowClient(), buffer_size=10_000)
+        for i in range(2000):
+            prod.add(b"x", FAIL_KEY if i % 7 == 0 else f"k{i}")
+        # tag the failing records so their order is visible
+        prod._buffer = [
+            (f"m{i}".encode(), pk, a) for i, (_, pk, a) in enumerate(prod._buffer)
+        ]
+        assert prod._send_batch(500, width=4) == 2000 - 286
+        return [(data, attempts) for data, _, attempts in prod._buffer]
+
+    expected = [(f"m{i}".encode(), 1) for i in range(0, 2000, 7)]
+    assert run([0.0, 0.01, 0.02, 0.03]) == expected
+    assert run([0.03, 0.02, 0.01, 0.0]) == expected
+
+
+def test_no_put_starts_after_flush_deadline():
+    """The deadline is checked before each round and again after its
+    backoff sleep: a backoff clamped to the deadline sends nothing."""
+    clock = FakeClock()
+    starts = []
+
+    class FailingClient:
+        def put_records(self, Records, StreamName):  # noqa: N803
+            starts.append(clock())
+            raise RuntimeError("oh noes")
+
+    prod, _, _ = make_producer(
+        client=FailingClient(), clock=clock, buffer_size=5000, backoff_max_s=2.0
+    )
+    for i in range(2000):
+        prod.add(b"x")
+    sent, remaining = prod.flush(timeout_s=3.0)
+    assert (sent, remaining) == (0, 2000)
+    # rounds at t=0, t=0.4 (50ms·2³ backoff) and t=2.4 (capped 2s); the
+    # fourth round's backoff is clamped to 0.6s and ends at the deadline
+    assert starts == pytest.approx([0.0] * 4 + [0.4] * 4 + [2.4] * 4)
+    assert clock() == pytest.approx(3.0)
+
+
+def test_events_stay_bounded_under_sustained_throttling():
+    """ProducerStats.events keeps the newest EVENTS_MAXLEN messages
+    while the counters stay exact; every tick's snapshot is bounded."""
+    snaps = []
+    prod, client, clock = make_producer(buffer_size=100, backoff_max_s=2.0)
+    prod.stat_receiver = snaps.append
+    client.should_err = True
+    for i in range(5):
+        prod.add(b"x")
+    n = EVENTS_MAXLEN + 500
+    for _ in range(n):
+        prod._send_batch(500)
+    s = prod.stats
+    assert s.put_calls == s.kinesis_errors == n
+    assert s.events_total == 2 * n - 1  # an error per call, a backoff per retry
+    assert len(s.events) == EVENTS_MAXLEN
+    assert s.events[-1] == "put_records error: oh noes"
+    assert len(snaps) >= n - 10  # the capped 2s backoff ticks every round
+    assert max(len(snap.events) for snap in snaps) == EVENTS_MAXLEN
+    assert snaps[-1].events_total <= s.events_total
+    assert len(prod._buffer) == 5 and s.records_shed == 0
+
+
+def _child_flush() -> None:
+    prod, _, _ = make_producer(buffer_size=2000)
+    for i in range(1200):
+        prod.add(b"x")
+    assert prod.flush(timeout_s=10) == (1200, 0)
+
+
+def test_forked_child_flushes_after_parent_fanned_out():
+    """A child forked after the parent used the shared put pool must
+    not inherit a pool whose threads did not survive the fork: with the
+    pool at full size and idle, its executor would start no thread for
+    the child's requests and the child's flush would wait forever."""
+    import multiprocessing
+    import time
+
+    class SlowClient(MockKinesisClient):
+        def put_records(self, Records, StreamName):  # noqa: N803
+            time.sleep(0.02)  # overlapping calls bring the pool to full size
+            return super().put_records(Records, StreamName)
+
+    prod, client, _ = make_producer(client=SlowClient(), buffer_size=2000)
+    for i in range(2000):
+        prod.add(b"x")
+    assert prod.flush() == (2000, 0)
+    assert len(client.calls) == PIPELINE_WIDTH  # one round
+    child = multiprocessing.get_context("fork").Process(target=_child_flush)
+    child.start()
+    child.join(timeout=30)
+    if child.exitcode is None:
+        child.kill()
+        child.join()
+        pytest.fail("forked child hung in flush")
+    assert child.exitcode == 0
+
+
+def test_concurrent_producers_share_the_put_pool():
+    """More producer threads than cores drain at once through the one
+    shared pool, with a short switch interval; every producer's own
+    counters stay exact because only put_records leaves its thread."""
+    import sys
+
+    def drain(i, out):
+        prod, client, _ = make_producer(
+            buffer_size=3000, max_attempts_per_record=2
+        )
+        for j in range(2000 + i):
+            prod.add(b"x", FAIL_KEY if j % 10 == 0 else f"k{j}")
+        out[i] = (prod.flush(timeout_s=60), prod.stats, client.calls)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out: dict = {}
+        threads = [
+            threading.Thread(target=drain, args=(i, out)) for i in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    for i in range(8):
+        (sent, remaining), stats, calls = out[i]
+        n_fail = len(range(0, 2000 + i, 10))
+        assert (sent, remaining) == (2000 + i - n_fail, 0)
+        assert stats.records_dropped == stats.retries == n_fail
+        assert sum(calls) == 2000 + i + n_fail
+        assert stats.put_calls == len(calls)
