@@ -66,12 +66,35 @@ _STOP_LIT_CAP = 4096
 _CHUNK_CHARS = 64
 
 
-def _shingles(text_col: str = "text") -> F.Column:
-    """Distinct 3-word shingles of a text column (codegen'd)."""
+# Name of the projected token column the shingle kernel reads.
+_WORDS = "_words"
+
+
+def _with_words(df: DataFrame) -> DataFrame:
+    """``df`` plus the ``_WORDS`` column (``split(text, ' ')``) that
+    :func:`_shingles` reads. Project it after any repartition, so the
+    shuffle carries the text only."""
+    return df.withColumn(_WORDS, F.split("text", " "))
+
+
+def _shingles() -> F.Column:
+    """Distinct 3-word shingles of the projected ``_WORDS`` column (see
+    :func:`_with_words`).
+
+    The tokens must be a column projected BELOW this expression, not a
+    ``split`` inside it: Spark does not hoist loop-invariant work out
+    of a lambda, so ``split(text)`` inside the ``transform`` body ran
+    once per shingle — a W-word document was split W-2 times,
+    quadratic per document. A projected column is computed once per
+    row and the lambda reads it by reference. CollapseProject does not
+    inline it back, because the expression below references it twice
+    (``size`` and ``slice``) and ``split`` is not cheap to duplicate;
+    ``tests/test_dedup_kernels.py`` pins the optimized plan.
+    """
     return F.array_distinct(
         F.expr(
-            f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {_SHINGLE - 1}, 1)),"
-            f" i -> concat_ws(' ', slice(split({text_col}, ' '), i, {_SHINGLE})))"
+            f"transform(sequence(1, greatest(size({_WORDS}) - {_SHINGLE - 1}, 1)),"
+            f" i -> concat_ws(' ', slice({_WORDS}, i, {_SHINGLE})))"
         )
     )
 
@@ -109,7 +132,9 @@ def _shingle_index(docs: DataFrame, max_df: int = _MAX_DF) -> DataFrame:
     # count sizes the build; inert below ~1.6M docs (32 cores × the
     # per-task bound), so every plan ≤ sf10 is unchanged.
     inv = (
-        spread(docs, min_parts=docs.count() // _INDEX_DOCS_PER_TASK)
+        _with_words(
+            spread(docs, min_parts=docs.count() // _INDEX_DOCS_PER_TASK)
+        )
         .select("doc_id", F.explode(_shingles()).alias("shingle"))
         .localCheckpoint(eager=True)
     )
@@ -461,7 +486,7 @@ def _minhash_signatures(docs: DataFrame, max_df: int = _MAX_DF) -> DataFrame:
     # the hashed-shingle arrays — one shingle/hash pass total, K longs
     # per doc (tiny next to the raw text).
     base = (
-        spread(docs)
+        _with_words(spread(docs))
         .select(
             "doc_id",
             F.transform(_shingles(), lambda s: F.xxhash64(s)).alias("hs"),
@@ -1922,7 +1947,7 @@ def q_dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     or corpus-side index build. Output: the contaminated doc_ids with
     their overlap counts (the drop list).
     """
-    docs = table(spark, sf_dir, "documents")
+    docs = _with_words(table(spark, sf_dir, "documents"))
     is_eval = (F.col("doc_id") % 100 == 0) & (
         F.col("doc_id") < 100 * _DECON_EVAL_CAP
     )

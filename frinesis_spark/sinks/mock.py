@@ -10,10 +10,11 @@ knobs:
   entries (:831-836), driving the retry-then-drop paths.
 
 Delivered records are appended to ``store_dir`` (one JSON-lines file
-per call, unique name → safe under concurrent executor tasks), which
-is the read-back channel for delivery-multiset assertions — the same
-role localstack's GetRecords plays in the reference's integration
-tests (integration_test.go:112-143).
+per call, unique name → safe under concurrent executor tasks,
+published whole by a rename), which is the read-back channel for
+delivery-multiset assertions — the same role localstack's GetRecords
+plays in the reference's integration tests
+(integration_test.go:112-143).
 """
 
 from __future__ import annotations
@@ -37,6 +38,10 @@ class MockKinesisClient:
     # injectables (kept local to the process; unit tests only)
     advance_clock: object = None
     calls: list = field(default_factory=list)
+    # Read-side parse cache: call-file name -> {stream: [records]}.
+    # Call files are immutable once published, so each is parsed once
+    # per client.
+    _parsed: dict = field(default_factory=dict, init=False, repr=False)
 
     def put_records(self, Records, StreamName):  # noqa: N803 (boto3 API)
         self.calls.append(len(Records))
@@ -66,11 +71,13 @@ class MockKinesisClient:
             # log position of already-written records never changes as
             # later calls append — required for the streaming reader's
             # positional offsets (uuid-only names reshuffled the log).
-            path = os.path.join(
-                self.store_dir,
-                f"call_{time.time_ns():020d}_{uuid.uuid4().hex}.jsonl",
-            )
-            with open(path, "w") as f:
+            name = f"call_{time.time_ns():020d}_{uuid.uuid4().hex}.jsonl"
+            path = os.path.join(self.store_dir, name)
+            # Written under a name readers skip, then renamed: a reader
+            # sees none or all of this call's records, never a prefix
+            # (which a parse cache would otherwise keep for good).
+            tmp = os.path.join(self.store_dir, f".{name}.tmp")
+            with open(tmp, "w") as f:
                 for rec in delivered:
                     f.write(
                         json.dumps(
@@ -88,6 +95,7 @@ class MockKinesisClient:
                         )
                         + "\n"
                     )
+            os.replace(tmp, path)
         return {"FailedRecordCount": failed, "Records": results}
 
     # -- read side (GetRecords surface, integration_test.go:112-143) ---
@@ -98,7 +106,20 @@ class MockKinesisClient:
     # mock, like the reference, guarantees delivery, not order.
 
     def _shard_log(self, stream: str) -> list[dict]:
-        return [r for r in read_back(self.store_dir) if r["stream"] == stream]
+        """The stream's records in log order. The directory is listed
+        on every call, so new call files appear and deleted ones drop
+        out; each file is parsed only the first time it is seen."""
+        names = _call_files(self.store_dir)
+        parsed = {}
+        for name in names:
+            by_stream = self._parsed.get(name)
+            if by_stream is None:
+                by_stream = {}
+                for r in _parse_call_file(os.path.join(self.store_dir, name)):
+                    by_stream.setdefault(r["stream"], []).append(r)
+            parsed[name] = by_stream
+        self._parsed = parsed
+        return [r for name in names for r in parsed[name].get(stream, ())]
 
     def list_shards(self, StreamName):  # noqa: N803 (boto3 API)
         return {"Shards": [{"ShardId": "shardId-000000000000"}]}
@@ -164,17 +185,28 @@ def read_back(store_dir: str) -> list[dict]:
     the reference compares against sent messages
     (integration_test.go:151-157). ``data`` is returned as the exact
     ``bytes`` that were sent (base64 store roundtrip)."""
+    return [
+        r
+        for name in _call_files(store_dir)
+        for r in _parse_call_file(os.path.join(store_dir, name))
+    ]
+
+
+def _call_files(store_dir: str | None) -> list[str]:
+    """Published call-file names, sorted so shard-iterator offsets are
+    stable across calls."""
+    if not store_dir or not os.path.isdir(store_dir):
+        return []
+    return sorted(n for n in os.listdir(store_dir) if n.endswith(".jsonl"))
+
+
+def _parse_call_file(path: str) -> list[dict]:
     out: list[dict] = []
-    if not os.path.isdir(store_dir):
-        return out
-    # Sorted so shard-iterator offsets are stable across calls.
-    for name in sorted(os.listdir(store_dir)):
-        if name.endswith(".jsonl"):
-            with open(os.path.join(store_dir, name)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    rec["data"] = base64.b64decode(rec.pop("data_b64"))
-                    out.append(rec)
+    with open(path) as f:
+        for line in f:
+            if not line.strip():
+                continue
+            rec = json.loads(line)
+            rec["data"] = base64.b64decode(rec.pop("data_b64"))
+            out.append(rec)
     return out

@@ -13,7 +13,6 @@ end. The Spark analog of the reference's TestSend round trip
 
 from __future__ import annotations
 
-import atexit
 import shutil
 import tempfile
 
@@ -26,18 +25,15 @@ from frinesis_spark.sinks.mock import MockClientFactory
 from frinesis_spark.sources.kinesis import read_kinesis
 
 
-def _detach(out: DataFrame, tag: str) -> DataFrame:
-    """Materialize the tiny per-topic aggregate to parquet and return
-    a lazy scan of it, detaching the plan from the mock store the
-    caller is about to rmtree — without routing rows through the
-    driver as Python objects (the collect-detach this replaces, r7
-    verdict item 7). The detach dir outlives the returned frame for
-    the process lifetime and is reclaimed atexit."""
-    spark = out.sparkSession
-    d = tempfile.mkdtemp(prefix=f"kinesis_detach_{tag}_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    out.write.mode("overwrite").parquet(d)
-    return spark.read.parquet(d)
+def _detach(out: DataFrame) -> DataFrame:
+    """Materialize the tiny per-topic aggregate (eager local
+    checkpoint) and return a frame over those blocks, detaching the
+    plan from the mock store the caller is about to rmtree — without
+    routing rows through the driver as Python objects (the
+    collect-detach this replaces, r7 verdict item 7). The blocks live
+    in the session's block manager, so no temp directory is left
+    behind."""
+    return out.localCheckpoint(eager=True)
 
 
 def _union_and_aggregate(streams: list) -> DataFrame:
@@ -85,9 +81,12 @@ def q_source_kinesis_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         topics = [r[0] for r in msgs.select("topic").distinct().collect()]
         streams = [read_kinesis(spark, factory, t) for t in sorted(topics)]
         out = _union_and_aggregate(streams)
-        return _detach(out, "read")
+        return _detach(out)
     finally:
         shutil.rmtree(store, ignore_errors=True)
+
+
+_DS_TOPICS = ("purchase", "view")
 
 
 def q_source_kinesis_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,7 +106,7 @@ def q_source_kinesis_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .load() spins its own Python planner + worker set); the oracle
     # applies the same filter.
     e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin("view", "purchase")
+        F.col("event_type").isin(*_DS_TOPICS)
     )
     msgs = e.select(
         F.col("event_type").alias("stream"),
@@ -123,16 +122,18 @@ def q_source_kinesis_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
-        topics = [r[0] for r in msgs.select("stream").distinct().collect()]
+        # The filter names the topics, so no distinct() job finds
+        # them: a topic with no rows reads an empty stream and yields
+        # no group, the same as the oracle's GROUP BY.
         streams = [
             spark.read.format(FORMAT_NAME)
             .option("stream", t)
             .option("mock_store_dir", store)
             .load()
-            for t in sorted(topics)
+            for t in _DS_TOPICS
         ]
         out = _union_and_aggregate(streams)
-        return _detach(out, "ds")
+        return _detach(out)
     finally:
         shutil.rmtree(store, ignore_errors=True)
 

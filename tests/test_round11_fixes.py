@@ -160,7 +160,7 @@ class TestNgramDfCapBinding:
 
         # Independent stop-set measurement (not via _shingle_index):
         # which regime does this corpus force?
-        inv0 = docs.select(
+        inv0 = D._with_words(docs).select(
             "doc_id", F.explode(D._shingles()).alias("shingle"))
         dfreq = inv0.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         stop_n = dfreq.where(F.col("df") > D._MAX_DF).count()

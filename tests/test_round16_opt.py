@@ -106,8 +106,49 @@ def test_split_stage_int96_guard(tmp_path, monkeypatch):
     )
     sch = pq.ParquetFile(path).schema
     assert sch.column(sch.names.index("ts")).physical_type == "INT96"
-    if path.stat().st_size < catalog._SPLIT_MIN_BYTES:
-        pytest.skip("fixture too small to trigger staging")
+    assert path.stat().st_size >= catalog._SPLIT_MIN_BYTES
     monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
     got = catalog._split_staged_path(str(tmp_path), "events")
     assert got == str(path), "INT96 relayout must be discarded"
+
+
+def test_split_stage_guard_checks_every_file(tmp_path, monkeypatch):
+    """A two-file table whose SECOND file alone has INT96 timestamps
+    must not stage either: the guard compares every (file, part)
+    pair, not only the first."""
+    import datetime as dt
+
+    n = 70_000
+    base = dt.datetime(2024, 1, 1)
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(
+                [base + dt.timedelta(seconds=i) for i in range(n)],
+                pa.timestamp("us"),
+            ),
+        }
+    )
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    for i, int96 in enumerate((False, True)):
+        pq.write_table(
+            tbl,
+            table_dir / f"part-{i}.parquet",
+            row_group_size=n,
+            compression="none",
+            use_dictionary=False,
+            use_deprecated_int96_timestamps=int96,
+        )
+    types = [
+        pq.ParquetFile(table_dir / f"part-{i}.parquet")
+        .schema.column(1)
+        .physical_type
+        for i in range(2)
+    ]
+    assert types == ["INT64", "INT96"]
+    size = sum(p.stat().st_size for p in table_dir.iterdir())
+    assert size >= catalog._SPLIT_MIN_BYTES
+    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
+    got = catalog._split_staged_path(str(tmp_path), "events")
+    assert got == str(table_dir), "INT96 relayout must be discarded"

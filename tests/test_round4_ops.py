@@ -50,10 +50,17 @@ def test_stop_shingle_cap_inert_on_fixture(spark, sf_dir):
     the capped index equals the raw explode — the oracle hash-match in
     CORRECTNESS therefore pins the capped semantics at zero drift."""
     from frinesis_spark.catalog import table
-    from frinesis_spark.operators.dedup import _MAX_DF, _shingle_index, _shingles
+    from frinesis_spark.operators.dedup import (
+        _MAX_DF,
+        _shingle_index,
+        _shingles,
+        _with_words,
+    )
 
     docs = table(spark, sf_dir, "documents")
-    raw = docs.select("doc_id", F.explode(_shingles()).alias("shingle"))
+    raw = _with_words(docs).select(
+        "doc_id", F.explode(_shingles()).alias("shingle")
+    )
     capped = _shingle_index(docs)
     assert capped.count() == raw.count()
     max_df = (
@@ -72,7 +79,11 @@ def test_minhash_stop_filter_drops_boilerplate_hash(spark):
     boilerplate drop out."""
     from pyspark.sql import functions as F
 
-    from frinesis_spark.operators.dedup import _minhash_signatures, _shingles
+    from frinesis_spark.operators.dedup import (
+        _minhash_signatures,
+        _shingles,
+        _with_words,
+    )
 
     boiler = "common header text here"
     rows = [(i, f"{boiler} body {i} xx yy zz") for i in range(12)]
@@ -84,11 +95,12 @@ def test_minhash_stop_filter_drops_boilerplate_hash(spark):
     assert ids == set(range(12))
     # Count surviving hashes for one doc: raw shingles minus the stop
     # ones shared by all 13 docs (df=13 > 5).
-    raw = docs.where(F.col("doc_id") == 0).select(
+    raw = _with_words(docs.where(F.col("doc_id") == 0)).select(
         F.size(_shingles()).alias("n")
     ).first()[0]
     n_shared = (
-        docs.select("doc_id", F.explode(_shingles()).alias("s"))
+        _with_words(docs)
+        .select("doc_id", F.explode(_shingles()).alias("s"))
         .groupBy("s")
         .agg(F.countDistinct("doc_id").alias("df"))
         .where(F.col("df") > 5)

@@ -72,13 +72,15 @@ def test_minhash_hash_cap_matches_string_cap_stop_set(spark):
     Fixture: 5 docs sharing the boilerplate shingle "common license
     header" (DF 5 > cap 3); every other shingle is unique (DF 1).
     """
-    from frinesis_spark.operators.dedup import _shingles
+    from frinesis_spark.operators.dedup import _shingles, _with_words
 
     texts = [
         (i, f"doc{i} unique{i} tail{i} common license header")
         for i in range(5)
     ]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    docs = _with_words(
+        spark.createDataFrame(texts, "doc_id long, text string")
+    )
     max_df = 3
 
     inv = docs.select("doc_id", F.explode(_shingles()).alias("shingle"))
