@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from frinesis_spark.tuning import fine_split_defaults
+
 
 def get_spark(app_name: str = "frinesis_spark") -> SparkSession:
     """Build (or reuse) the SparkSession.
@@ -23,6 +25,7 @@ def get_spark(app_name: str = "frinesis_spark") -> SparkSession:
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or (
         cpus if cpus != "*" else str(os.cpu_count() or 8)
     )
+    fine_floor, fine_open = fine_split_defaults()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -51,7 +54,7 @@ def get_spark(app_name: str = "frinesis_spark") -> SparkSession:
         # cores. Parameterised for deployments that want it back up.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            fine_floor,
         )
         # Scan split floor (r15, guide §6): maxSplitBytes =
         # min(maxPartitionBytes, max(openCostInBytes, bytes/minPartitionNum)),
@@ -71,10 +74,7 @@ def get_spark(app_name: str = "frinesis_spark") -> SparkSession:
         # Pairs with the row-group relayout in
         # catalog._split_staged_path (a split without a row-group
         # boundary inside it is still one task's work).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "1048576"),
-        )
+        .config("spark.sql.files.openCostInBytes", fine_open)
         # Deterministic timestamp semantics vs the DuckDB oracle
         # (DuckDB timestamps are UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")

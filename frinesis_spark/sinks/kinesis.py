@@ -662,17 +662,41 @@ def _payload_bytes(data) -> bytes:
     )
 
 
-class KinesisBatchWriter:
-    """foreachBatch writer: A1/A2's per-topic producer registry over a
-    micro-batch DataFrame.
+def produce_per_topic(
+    client,
+    config: KinesisSinkConfig,
+    records: Iterable[tuple[str, object, str | None]],
+) -> dict[str, tuple[ProducerStats, int]]:
+    """A1/A2's per-topic producer registry for one Spark task.
 
-    Each executor task (partition) lazily creates one
-    :class:`BatchProducer` per topic it sees (sink.go:79-104's
-    double-checked registry collapses to a dict — tasks are
-    single-threaded), drains it with the configured deadline, and
-    returns per-topic delivery stats as rows. Per-topic partition
-    isolation comes from ``repartition(topic)`` before the write —
-    the Spark analogue of one-goroutine-per-topic (sink.go:26).
+    Feeds ``(topic, data, partition_key)`` records to one
+    :class:`BatchProducer` per topic, created on first use
+    (sink.go:79-104's double-checked registry collapses to a dict —
+    tasks are single-threaded), then drains every topic with the
+    configured deadline (A11). Returns ``{topic: (stats, remaining)}``;
+    what an undelivered remainder means is the caller's decision."""
+    producers: dict[str, BatchProducer] = {}
+    for topic, data, pk in records:
+        prod = producers.get(topic)
+        if prod is None:
+            prod = producers[topic] = BatchProducer(client, topic, config)
+        prod.add(_payload_bytes(data), pk)  # A3 (+A16 inside add)
+    out = {}
+    for topic, prod in producers.items():
+        _sent, remaining = prod.flush(config.flush_timeout_s, send_stats=True)
+        out[topic] = (prod.stats, remaining)
+    return out
+
+
+class KinesisBatchWriter:
+    """foreachBatch writer: A1/A2's per-topic producer registry
+    (:func:`produce_per_topic`) over a micro-batch DataFrame.
+
+    Each executor task (partition) runs the registry with a lazily
+    created client and returns per-topic delivery stats as rows.
+    Per-topic partition isolation comes from ``repartition(topic)``
+    before the write — the Spark analogue of one-goroutine-per-topic
+    (sink.go:26).
     """
 
     #: schema of the stats rows returned by write_batch
@@ -719,30 +743,21 @@ class KinesisBatchWriter:
         self.partition_key_col = partition_key_col
 
     def _write_partition(self, rows: Iterator) -> Iterator[tuple]:
-        client = self.client_factory()  # A2: lazy, one per task
-        producers: dict[str, BatchProducer] = {}
-        for row in rows:
-            topic = row[self.topic_col]
-            prod = producers.get(topic)
-            if prod is None:  # A1/A2: create on first use
-                prod = BatchProducer(client, topic, self.config)
-                producers[topic] = prod
-            data = row[self.data_col]
-            # Column-presence fallback (r9 review wave 8): the default
-            # partition_key_col on a frame WITHOUT that column raised
-            # per row instead of falling back to the advertised A16
-            # UUID generation (the DataSource writer's d.get path).
-            pk = None
-            if self.partition_key_col is not None and (
-                self.partition_key_col in (getattr(row, "__fields__", ()) or ())
-            ):
-                pk = row[self.partition_key_col]
-            prod.add(_payload_bytes(data), pk)  # A3 (+A16 inside add)
-        for topic, prod in producers.items():  # A11: flush every topic
-            _sent, remaining = prod.flush(
-                timeout_s=self.config.flush_timeout_s, send_stats=True
+        pk_col = self.partition_key_col
+        # Column-presence fallback (r9 review wave 8): a frame WITHOUT
+        # the partition-key column gets the advertised A16 UUID keys
+        # instead of raising per row.
+        records = (
+            (
+                row[self.topic_col],
+                row[self.data_col],
+                row[pk_col] if pk_col in row.__fields__ else None,
             )
-            s = prod.stats
+            for row in rows
+        )
+        client = self.client_factory()  # A2: lazy, one per task
+        per_topic = produce_per_topic(client, self.config, records)
+        for topic, (s, remaining) in per_topic.items():
             yield (
                 topic,
                 s.records_sent,

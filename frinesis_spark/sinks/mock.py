@@ -69,8 +69,9 @@ class MockKinesisClient:
             os.makedirs(self.store_dir, exist_ok=True)
             # Monotonic time prefix: read_back sorts filenames, so the
             # log position of already-written records never changes as
-            # later calls append — required for the streaming reader's
-            # positional offsets (uuid-only names reshuffled the log).
+            # later calls append — the mock's sequence numbers are those
+            # positions, and the streaming reader resumes after the last
+            # one it read (uuid-only names reshuffled the log).
             name = f"call_{time.time_ns():020d}_{uuid.uuid4().hex}.jsonl"
             path = os.path.join(self.store_dir, name)
             # Written under a name readers skip, then renamed: a reader
@@ -129,15 +130,12 @@ class MockKinesisClient:
     ):  # noqa: N803
         if ShardIteratorType == "TRIM_HORIZON":
             pos = 0
-        elif ShardIteratorType == "AT_SEQUENCE_NUMBER":
-            # Mock sequence numbers ARE positions (get_records below),
-            # so positioned restarts — the streaming-offset contract —
-            # resolve directly.
-            pos = int(kw["StartingSequenceNumber"])
         elif ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
             # Real Kinesis resume semantics: sequence numbers are
             # opaque, so a restart says "after the last one I read" —
-            # the streaming readers store that, never seq+1 arithmetic.
+            # the streaming reader stores that, never seq+1 arithmetic.
+            # Mock sequence numbers are log positions (get_records
+            # below), so "after" resolves to the next position.
             pos = int(kw["StartingSequenceNumber"]) + 1
         else:
             raise AssertionError(f"unsupported {ShardIteratorType}")

@@ -43,28 +43,79 @@ def list_shard_ids(client, stream_name: str) -> list[str]:
         kwargs = {"NextToken": token}
 
 
+def _seq_after(a: str, b: str) -> bool:
+    """True iff sequence number ``a`` is strictly beyond ``b``.
+    Kinesis sequence numbers are big-integer strings that increase
+    within a shard; non-numeric values (an exotic mock) fall back to
+    False, preserving the equality-stop behavior."""
+    try:
+        return int(a) > int(b)
+    except (TypeError, ValueError):
+        return False
+
+
 def _drain_shard(
-    client, stream_name: str, shard_id: str, limit_per_call: int
+    client,
+    stream_name: str,
+    shard_id: str,
+    limit_per_call: int,
+    *,
+    after: str = "",
+    stop_seq: str | None = None,
+    max_records: int | None = None,
 ) -> Iterator[tuple]:
-    """One shard's records from TRIM_HORIZON to caught-up — the
-    reference's read-back loop (integration_test.go:112-143)."""
+    """One shard's records until caught-up — the reference's read-back
+    loop (integration_test.go:112-143) and the only shard-read loop in
+    the engine: the batch readers and the streaming reader all drain
+    through it.
+
+    ``after`` "" starts at TRIM_HORIZON; a last-read sequence number
+    resumes with AFTER_SEQUENCE_NUMBER (sequence numbers are opaque
+    and non-contiguous, never seq+1). ``stop_seq`` ends the drain after
+    that record — the inclusive replay bound of a micro-batch, with no
+    ordering assumption. ``max_records`` caps the records yielded."""
+    if after:
+        start = {
+            "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
+            "StartingSequenceNumber": str(after),
+        }
+    else:
+        start = {"ShardIteratorType": "TRIM_HORIZON"}
     it = client.get_shard_iterator(
-        StreamName=stream_name,
-        ShardId=shard_id,
-        ShardIteratorType="TRIM_HORIZON",
+        StreamName=stream_name, ShardId=shard_id, **start
     )["ShardIterator"]
-    while it:
-        resp = client.get_records(ShardIterator=it, Limit=limit_per_call)
-        for rec in resp.get("Records", []):
+    left = max_records
+    while it and (left is None or left > 0):
+        # Budget-aware Limit (r9 review wave 8): a full page asked for
+        # near the end of the budget would overshoot it by up to a
+        # page into the caller's buffer.
+        limit = limit_per_call if left is None else min(limit_per_call, left)
+        resp = client.get_records(ShardIterator=it, Limit=limit)
+        records = resp.get("Records", [])
+        for rec in records:
+            seq = str(rec["SequenceNumber"])
+            # Replay bound safety (r9 review wave 8): if the stop
+            # record itself is gone (aged past retention), the
+            # equality stop never fires and the replay would drain to
+            # the live tip — records beyond the committed end belong
+            # to LATER batches. Sequence numbers increase within a
+            # shard, so a numeric beyond-the-bound record ends the
+            # replay WITHOUT being included.
+            if stop_seq is not None and _seq_after(seq, stop_seq):
+                return
             yield (
                 stream_name,
                 shard_id,
-                rec.get("SequenceNumber"),
+                seq,
                 rec.get("PartitionKey"),
                 bytes(rec.get("Data") or b""),
             )
+            if seq == stop_seq:
+                return
+        if left is not None:
+            left -= len(records)
         it = resp.get("NextShardIterator")
-        if not resp.get("Records") and not resp.get("MillisBehindLatest"):
+        if not records and not resp.get("MillisBehindLatest"):
             return  # caught up (empty batch at stream head)
 
 

@@ -78,8 +78,10 @@ def q_source_kinesis_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{undelivered} records undelivered after flush deadline"
             )
 
-        topics = [r[0] for r in msgs.select("topic").distinct().collect()]
-        streams = [read_kinesis(spark, factory, t) for t in sorted(topics)]
+        # The writer's stats rows name every topic it wrote, so the
+        # read-back needs no further pass over events.
+        topics = sorted({r.topic for r in stats})
+        streams = [read_kinesis(spark, factory, t) for t in topics]
         out = _union_and_aggregate(streams)
         return _detach(out)
     finally:

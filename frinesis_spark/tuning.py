@@ -70,6 +70,17 @@ COARSE_SCAN = frozenset(
 )
 
 
+def fine_split_defaults() -> tuple[str, str]:
+    """The session's fine-grained (AQE floor, scan openCost) — the r15
+    values unless the env hooks move them. ``get_spark`` builds the
+    session with these and :func:`apply_shape_conf` re-asserts them,
+    so the two can never disagree."""
+    return (
+        os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+        os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "1048576"),
+    )
+
+
 def apply_shape_conf(spark: SparkSession, name: str) -> None:
     """Set the two split knobs for ``name``'s shape class.
 
@@ -81,8 +92,7 @@ def apply_shape_conf(spark: SparkSession, name: str) -> None:
     its floor forward)."""
     if os.environ.get("SPARK_GRAFT_SHAPE_CONF", "1") == "0":
         return
-    fine_floor = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
-    fine_open = os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "1048576")
+    fine_floor, fine_open = fine_split_defaults()
     coarse = name in COARSE_SHUFFLE or name in COARSE_SCAN
     spark.conf.set(_FLOOR_KEY, _COARSE_FLOOR if coarse else fine_floor)
     spark.conf.set(

@@ -75,36 +75,6 @@ def test_write_routes_per_row_stream(registered, tmp_path):
         assert n == expect, topic
 
 
-def test_partitioned_stream_reader_incremental(registered, tmp_path):
-    """The executor-side (partitioned) stream reader delivers each
-    record exactly once across micro-batches."""
-    spark = registered
-    store = str(tmp_path / "pstore")
-    _write(spark, store, [f"x{i}" for i in range(6)], stream="s2")
-    q = (
-        spark.readStream.format(FORMAT_NAME)
-        .option("stream", "s2")
-        .option("mock_store_dir", store)
-        .option("partitioned_stream", "true")
-        .load()
-        .writeStream.format("memory")
-        .queryName("kds_part_sink")
-        .option("checkpointLocation", str(tmp_path / "pckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM kds_part_sink").count() == 6
-        _write(spark, store, ["y0", "y1"], stream="s2")
-        q.processAllAvailable()
-        rows = spark.sql("SELECT data FROM kds_part_sink").collect()
-        assert sorted(bytes(r.data).decode() for r in rows) == sorted(
-            [f"x{i}" for i in range(6)] + ["y0", "y1"]
-        )
-    finally:
-        q.stop()
-
-
 def test_stream_writer_end_to_end(registered, tmp_path, sf_dir):
     """readStream(events) → writeStream.format(kinesis) — the
     reference's deployment shape; delivery multiset checked via the
@@ -172,6 +142,111 @@ def test_stream_reader_incremental(registered, tmp_path):
         assert got == sorted([f"a{i}" for i in range(5)] + [f"b{i}" for i in range(3)])
     finally:
         q.stop()
+
+
+class _PagedClient:
+    """Mock client whose get_records pages at most ``page`` records
+    (real Kinesis pages below the asked Limit too) and records every
+    Limit it was asked for."""
+
+    def __init__(self, inner, page):
+        self.inner = inner
+        self.page = page
+        self.limits = []
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+    def get_records(self, ShardIterator, Limit):  # noqa: N803 (boto3 API)
+        self.limits.append(Limit)
+        return self.inner.get_records(
+            ShardIterator=ShardIterator, Limit=min(Limit, self.page)
+        )
+
+
+def test_stream_reader_batch_budget(tmp_path):
+    """maxRecordsPerBatch caps one micro-batch: the batch ends at the
+    budget's last record, no get_records call asks for more than the
+    budget left, and the next batch resumes right after it."""
+    from frinesis_spark.sinks.mock import MockKinesisClient
+    from frinesis_spark.sources.kinesis_datasource import (
+        KinesisSimpleStreamReader,
+    )
+
+    store = str(tmp_path / "store")
+    inner = MockKinesisClient(store_dir=store)
+    inner.put_records(
+        Records=[
+            {"Data": f"m{i}".encode(), "PartitionKey": f"p{i}"}
+            for i in range(10)
+        ],
+        StreamName="s",
+    )
+    client = _PagedClient(inner, page=3)
+    reader = KinesisSimpleStreamReader(
+        {"stream": "s", "mock_store_dir": store, "maxrecordsperbatch": "4"}
+    )
+    reader.factory = lambda: client
+    shard = "shardId-000000000000"
+
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    rows = list(rows)
+    assert [bytes(r[4]) for r in rows] == [b"m0", b"m1", b"m2", b"m3"]
+    assert end == {shard: rows[3][2]}
+    # 4 asked, 3 paged back, then only the 1 left of the budget.
+    assert client.limits == [4, 1]
+    assert [r[2] for r in reader.readBetweenOffsets(start, end)] == [
+        r[2] for r in rows
+    ]
+
+    seen = [r[4] for r in rows]
+    offset = end
+    while True:
+        client.limits.clear()
+        batch, nxt = reader.read(offset)
+        batch = list(batch)
+        assert len(batch) <= 4
+        assert all(limit <= 4 for limit in client.limits)
+        if not batch:
+            assert nxt == offset
+            break
+        seen += [r[4] for r in batch]
+        offset = nxt
+    assert seen == [f"m{i}".encode() for i in range(10)]
+
+
+def test_writer_drains_every_stream_before_failing(tmp_path):
+    """A stream that cannot take records fails the task only after
+    every other stream of the task has been drained (at-least-once:
+    the retry re-sends, nothing is lost)."""
+    from pyspark.sql import Row
+
+    from frinesis_spark.sinks.mock import MockKinesisClient, read_back
+    from frinesis_spark.sources.kinesis_datasource import (
+        KinesisDataSourceWriter,
+    )
+
+    store = str(tmp_path / "store")
+
+    class _DeadStream(MockKinesisClient):
+        def put_records(self, Records, StreamName):  # noqa: N803
+            if StreamName == "dead":
+                raise RuntimeError("stream unavailable")
+            return super().put_records(Records, StreamName)
+
+    writer = KinesisDataSourceWriter(
+        {"stream": "live", "mock_store_dir": store}
+    )
+    writer.factory = lambda: _DeadStream(store_dir=store)
+    writer.config.flush_timeout_s = 0.2
+    rows = [Row(stream="dead", data=b"d0", partition_key="k0")] + [
+        Row(stream="live", data=f"l{i}".encode(), partition_key=f"k{i}")
+        for i in range(3)
+    ]
+    with pytest.raises(RuntimeError, match="dead"):
+        writer.write(iter(rows))
+    assert sorted(r["data"] for r in read_back(store)) == [b"l0", b"l1", b"l2"]
 
 
 def test_binary_payload_roundtrip(registered, tmp_path):

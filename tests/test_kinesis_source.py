@@ -172,6 +172,24 @@ def test_roundtrip_queries_leave_no_detach_dirs(spark, sf_dir):
         assert runs[0] == runs[1] and runs[0]
 
 
+def test_read_roundtrip_reads_topics_from_writer_stats(spark, sf_dir):
+    """source_kinesis_read takes the topics to read back from the
+    writer's collected stats rows: its jobs are the sink write, the
+    shard drains and the detach, with no distinct() scan of events."""
+    from frinesis_spark.sources.kinesis_query import QUERIES
+
+    sc = spark.sparkContext
+    group = "kinesis_read_roundtrip_jobs"
+    sc.setJobGroup(group, "source_kinesis_read job count")
+    try:
+        QUERIES["source_kinesis_read"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # A distinct() over events to find the topics would add 2 jobs.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+
+
 def test_datasource_roundtrip_topic_with_no_rows(spark, sf_dir, tmp_path):
     """A filtered topic with no events reads back an empty stream and
     yields no group — the oracle's GROUP BY, not an error."""

@@ -152,3 +152,22 @@ def test_split_stage_guard_checks_every_file(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
     got = catalog._split_staged_path(str(tmp_path), "events")
     assert got == str(table_dir), "INT96 relayout must be discarded"
+
+
+def test_fine_split_defaults_match_session(spark):
+    """A query outside the coarse sets leaves both split confs at what
+    get_spark set — after a coarse query has moved them."""
+    from frinesis_spark import tuning
+
+    started = spark.sparkContext.getConf()
+    want = {
+        key: started.get(key)
+        for key in (tuning._FLOOR_KEY, tuning._OPEN_KEY)
+    }
+    assert tuple(want.values()) == tuning.fine_split_defaults()
+    fine = "sql_tpch_q1"
+    assert fine not in tuning.COARSE_SHUFFLE | tuning.COARSE_SCAN
+    tuning.apply_shape_conf(spark, "sql_tpch_q2")  # coarse scan + floor
+    assert {k: spark.conf.get(k) for k in want} != want
+    tuning.apply_shape_conf(spark, fine)
+    assert {k: spark.conf.get(k) for k in want} == want

@@ -728,9 +728,7 @@ def test_stream_reader_replay_stops_at_vanished_bound(tmp_path):
     out must stop BEFORE the first record beyond the bound instead of
     silently draining to the live tip."""
     from frinesis_spark.sinks.mock import MockKinesisClient
-    from frinesis_spark.sources.kinesis_datasource import (
-        KinesisSimpleStreamReader,
-    )
+    from frinesis_spark.sources.kinesis import _drain_shard
 
     store = str(tmp_path / "store")
     client = MockKinesisClient(store_dir=store)
@@ -739,20 +737,23 @@ def test_stream_reader_replay_stops_at_vanished_bound(tmp_path):
             Records=[{"Data": f"m{i}".encode(), "PartitionKey": f"p{i}"}],
             StreamName="s",
         )
-    reader = KinesisSimpleStreamReader(
-        {"stream": "s", "mockstoredir": store}
-    )
     # Replay [after seq 1 .. seq 5]: normal inclusive stop.
-    rows, last = reader._read_shard_from(
-        client, "shardId-000000000000", "1", stop_seq="5"
+    rows = list(
+        _drain_shard(
+            client, "s", "shardId-000000000000", 10_000,
+            after="1", stop_seq="5",
+        )
     )
     assert [r[2] for r in rows] == ["2", "3", "4", "5"]
     # stop_seq "4.5-like" gap: a bound whose record no longer exists
     # (simulate with a never-assigned sequence between 4 and 5 is not
     # expressible in the positional mock, so use a bound BELOW the
     # stream head: all records are beyond it → empty replay).
-    rows, last = reader._read_shard_from(
-        client, "shardId-000000000000", "5", stop_seq="3"
+    rows = list(
+        _drain_shard(
+            client, "s", "shardId-000000000000", 10_000,
+            after="5", stop_seq="3",
+        )
     )
     assert rows == []  # everything after pos is beyond the bound
 

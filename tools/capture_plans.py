@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Capture per-query ``.explain("formatted")`` output for the r16
-optimization evidence trail (plans/r16/<query>_<tag>.txt).
+"""Capture per-query ``.explain("formatted")`` output for a round's
+optimization evidence trail (plans/<round>/<query>_<tag>.txt).
 
 The dump is taken AFTER executing the query's own DataFrame (collect),
 so with AQE the file carries the FINAL adaptive plan
@@ -9,7 +9,9 @@ partition specs) — the runtime shape the optimization claims are
 about, not just the static estimate.
 
 Usage:
-    python tools/capture_plans_r16.py <tag> <query>[,<query>...]
+    python tools/capture_plans.py <round> <tag> <query>[,<query>...]
+
+Round names the output directory under plans/ (e.g. ``r16``).
 
 Tag is typically "before" (run with the kill switches:
 SPARK_GRAFT_SPLIT_STAGE=0 SPARK_GRAFT_AQE_MIN_PARTITION_SIZE=1m
@@ -27,21 +29,20 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-OUT = REPO / "plans" / "r16"
-
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = [n for n in sys.argv[2].split(",") if n]
+    round_, tag = sys.argv[1], sys.argv[2]
+    names = [n for n in sys.argv[3].split(",") if n]
+    out = REPO / "plans" / round_
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from frinesis_spark import registry
     from frinesis_spark.session import get_spark
 
-    spark = get_spark(f"capture_plans_r16_{tag}")
+    spark = get_spark(f"capture_plans_{round_}_{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     queries = registry.queries()
-    OUT.mkdir(parents=True, exist_ok=True)
+    out.mkdir(parents=True, exist_ok=True)
 
     for name in names:
         if name not in queries:
@@ -53,7 +54,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = OUT / f"{name}_{tag}.txt"
+        path = out / f"{name}_{tag}.txt"
         path.write_text(
             f"# {name} — {tag} (sf_dir={sf_dir}, "
             f"cores={os.environ.get('SPARK_GRAFT_CPUS', '?')}, "
